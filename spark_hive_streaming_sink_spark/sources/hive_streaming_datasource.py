@@ -10,8 +10,10 @@ Semantics reproduced from the reference:
   (``HiveStreamDataWriter.scala:73-83``; string requirement ``:73``)
 - staged-write-then-commit transaction per micro-batch (the analogue of
   the TransactionBatch lifecycle, ``HiveWriter.scala:79-138``) — tasks
-  stage files, the driver-side ``commit(batchId)`` atomically renames
-  them into the partition directories
+  stage files, the driver-side ``commit(batchId)`` durably records the
+  batch's rename manifest, then atomically renames the staged files
+  into the partition directories; a replay that finds the manifest but
+  no ledger marker finishes those renames instead of appending again
 - batch-id ledger → idempotent replay (upgrade over the no-op epoch
   commit at ``HiveStreamWriter.scala:39-41``)
 
@@ -24,7 +26,8 @@ with ``spark.read.parquet`` (partition columns restored by discovery).
 
 This is the compatibility/ergonomics surface; the recommended
 high-throughput path is ``streaming.sink.write_stream_to_table``
-(pure-JVM foreachBatch insertInto, zero Python in the data path).
+(foreachBatch into the staged columnar publish of
+``streaming.sink.StagedBatchPublisher``, zero Python in the data path).
 
 Trigger modes: micro-batch only — ``availableNow`` (tested end to end
 by query ``source_python_datasource_sink``), ``processingTime`` and
@@ -38,6 +41,7 @@ the documented deviation of this port (README capability map; SURVEY
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 from dataclasses import dataclass, field
@@ -163,26 +167,70 @@ class HiveStreamingArrowWriter(DataSourceStreamArrowWriter):
     def _marker(self, batch_id: int) -> str:
         return os.path.join(self.path, "_ledger", f"batch-{batch_id}")
 
+    def _manifest(self, batch_id: int) -> str:
+        return os.path.join(self.path, "_ledger", f"batch-{batch_id}.manifest")
+
+    def _read_manifest(self, batch_id: int) -> list | None:
+        path = self._manifest(batch_id)
+        if not os.path.exists(path):
+            return None
+        with open(path) as f:
+            return json.load(f)
+
+    def _write_manifest(self, batch_id: int, pairs: list) -> None:
+        """Durably record the batch's (staged, final) pairs: write a
+        temp file, fsync it, atomically move it into place."""
+        path = self._manifest(batch_id)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path + ".tmp", "w") as f:
+            json.dump([list(p) for p in pairs], f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(path + ".tmp", path)
+
+    def _write_marker(self, batch_id: int) -> None:
+        with open(self._marker(batch_id), "w") as f:
+            f.write("committed\n")
+
+    @staticmethod
+    def _drop(staged) -> None:
+        for path, _rel in staged:
+            if os.path.exists(path):
+                os.remove(path)
+
     def commit(self, messages, batchId: int) -> None:
+        """Manifest → renames → marker. A crash after the manifest
+        leaves a replay that finds it without a marker: the replay
+        finishes the manifest's remaining renames and drops its own
+        freshly staged copy, so the batch lands exactly once."""
         staged = [f for m in messages if m is not None for f in m.files]
         if os.path.exists(self._marker(batchId)):
             # replayed batch: drop the newly staged duplicates
-            for path, _rel in staged:
-                if os.path.exists(path):
-                    os.remove(path)
+            self._drop(staged)
             return
-        for path, rel in staged:
+        pairs = self._read_manifest(batchId)
+        if pairs is None:
+            pairs = staged
+            self._write_manifest(batchId, pairs)
+        else:
+            # a previous attempt crashed after its manifest: publish
+            # ITS files, not this attempt's (which hold the same rows
+            # under new names)
+            owned = {path for path, _rel in pairs}
+            self._drop(f for f in staged if f[0] not in owned)
+        for path, rel in pairs:
             final = os.path.join(self.path, rel)
+            if os.path.exists(final):
+                continue  # renamed by the crashed attempt
             os.makedirs(os.path.dirname(final), exist_ok=True)
             os.rename(path, final)  # same-filesystem atomic move
-        os.makedirs(os.path.dirname(self._marker(batchId)), exist_ok=True)
-        with open(self._marker(batchId), "w") as f:
-            f.write("committed\n")
+        self._write_marker(batchId)
+        os.remove(self._manifest(batchId))
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is None:
-                continue
-            for path, _rel in m.files:
-                if os.path.exists(path):
-                    os.remove(path)
+        # files a durable manifest lists belong to the replay, which
+        # publishes them
+        owned = {path for path, _rel in self._read_manifest(batchId) or ()}
+        self._drop(
+            f for m in messages if m is not None for f in m.files if f[0] not in owned
+        )

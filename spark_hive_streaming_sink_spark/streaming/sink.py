@@ -444,8 +444,9 @@ class StagedBatchPublisher:
                 self._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
             )
             needs_recover = False
+            specs: list[str] = []
             for pdir in sorted(new_part_dirs):
-                specs = []
+                spec = []
                 for seg in pdir.split("/"):
                     col, _, val = seg.partition("=")
                     if val == "__HIVE_DEFAULT_PARTITION__":
@@ -455,15 +456,19 @@ class StagedBatchPublisher:
                         # to NULL (same convention the reference's Hive
                         # endpoint uses for NULL partition keys)
                         needs_recover = True
-                        specs = []
+                        spec = []
                         break
                     v = unescape(val).replace("'", "''")
-                    specs.append(f"{col}='{v}'")
-                if specs:
-                    self.spark.sql(
-                        f"ALTER TABLE {self.qualified} ADD IF NOT EXISTS "
-                        f"PARTITION ({', '.join(specs)})"
-                    )
+                    spec.append(f"{col}='{v}'")
+                if spec:
+                    specs.append(f"PARTITION ({', '.join(spec)})")
+            if specs:
+                # one statement for the whole batch: each statement is
+                # a catalog round trip, however many partitions it adds
+                self.spark.sql(
+                    f"ALTER TABLE {self.qualified} ADD IF NOT EXISTS "
+                    + " ".join(specs)
+                )
             if needs_recover:
                 # one metadata-listing pass, only on NULL-partition
                 # batches — a rare shape worth the O(#partitions) scan
@@ -557,8 +562,41 @@ def make_batch_writer(
     Replaces the reference's per-row path (extract partition values →
     JSON-encode → HiveWriter.write, ``HiveStreamDataWriter.scala:72-106``)
     with one staged columnar parquet job per micro-batch.
+
+    The provider's publisher is built on the first batch and reused for
+    the writer's life: the destination's location and format are
+    resolved once, and a txnlog publisher keeps its parsed commit log
+    between batches, so a batch reads only the commits that landed
+    since the previous one. A new query builds a new writer and starts
+    from an empty cache.
     """
     provider = _resolve_provider(options)
+    publisher = None
+
+    def get_publisher(spark: SparkSession):
+        nonlocal publisher
+        if publisher is None:
+            if provider == "txnlog":
+                from .txnlog import TxnLogPublisher
+
+                # the app_id must be stable across RESTARTS of one query
+                # (so replays dedupe) but distinct across FRESH queries
+                # whose batch ids restart at 0 (so a new stream into the
+                # same table is an append, not a phantom replay) — the
+                # checkpoint identity, not the table name, carries that
+                # (see write_stream_to_table).
+                publisher = TxnLogPublisher(
+                    spark,
+                    options.qualified_name,
+                    part_cols,
+                    scope=txn_app_id or scope or options.qualified_name,
+                    location=_table_location(spark, options.qualified_name),
+                )
+            else:
+                publisher = StagedBatchPublisher(
+                    spark, options.qualified_name, part_cols, scope=scope
+                )
+        return publisher
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         import time as _time
@@ -569,14 +607,12 @@ def make_batch_writer(
             # fencing FIRST: a writer that lost its lease to a takeover
             # must fail the batch before touching the destination
             lease.renew()
-        if ledger.committed(batch_id) and provider == "native":
+        if provider == "native" and ledger.committed(batch_id):
             # replayed batch — exactly-once skip; reclaim staging if the
             # pre-crash attempt died between marker and cleanup.
             # (log-backed providers skip via their own commit log below —
             # the log, not the ledger, is their correctness anchor)
-            StagedBatchPublisher(
-                spark, options.qualified_name, part_cols, scope=scope
-            ).cleanup(batch_id)
+            get_publisher(spark).cleanup(batch_id)
             return
         if part_cols and not options.auto_create_partitions:
             # HiveOptions.scala:35 / HiveWriter.scala:44 — with
@@ -665,21 +701,7 @@ def make_batch_writer(
             # one task per output partition → bounded file counts
             aligned = aligned.repartition(*[F.col(c) for c in part_cols])
         if provider == "txnlog":
-            from .txnlog import TxnLogPublisher
-
-            # the app_id must be stable across RESTARTS of one query
-            # (so replays dedupe) but distinct across FRESH queries
-            # whose batch ids restart at 0 (so a new stream into the
-            # same table is an append, not a phantom replay) — the
-            # checkpoint identity, not the table name, carries that
-            # (see write_stream_to_table).
-            stats = TxnLogPublisher(
-                spark,
-                options.qualified_name,
-                part_cols,
-                scope=txn_app_id or scope or options.qualified_name,
-                location=_table_location(spark, options.qualified_name),
-            ).publish(aligned, batch_id)
+            stats = get_publisher(spark).publish(aligned, batch_id)
             ledger.record(batch_id)  # fast-path skip; the log is the anchor
             if metrics is not None:
                 metrics.record(batch_id, {
@@ -710,17 +732,15 @@ def make_batch_writer(
                     },
                 )
             return
-        publisher = StagedBatchPublisher(
-            spark, options.qualified_name, part_cols, scope=scope
-        )
-        stats = publisher.publish(aligned, batch_id)
+        native = get_publisher(spark)
+        stats = native.publish(aligned, batch_id)
         # invalidate this session's cached file index; NB foreachBatch runs
         # in a CLONED session, so concurrent readers in other sessions of an
         # UNPARTITIONED table must refreshTable themselves before reading
         # (partitioned tables see new data via partition metadata)
         spark.catalog.refreshTable(options.qualified_name)
         ledger.record(batch_id)
-        publisher.cleanup(batch_id)
+        native.cleanup(batch_id)
         if metrics is not None:
             metrics.record(
                 batch_id,

@@ -34,8 +34,13 @@ self-contained (no external runtime):
   ``native`` provider only gets from its single-writer contract.
 
 Scale: a commit is ONE driver-side metadata write, O(1) in data size
-(vs the native provider's O(files-per-batch) renames); per-file
-row counts and partition-column min/max recorded in the commit give
+(vs the native provider's O(files-per-batch) renames), and its metadata
+reads cover only the commits that landed since the writer last looked,
+not the whole log: a :class:`TxnLogTable` caches the commits it has
+parsed (a commit file never changes after its exclusive create) and
+probes forward from its cached head, so per-batch commit cost does not
+grow with the log's length. Per-file row counts and partition-column
+min/max recorded in the commit give
 readers Delta-style data skipping without Hive partition directories
 (data files carry ALL columns — at 100 TB, stats-based skipping
 composes with any partitioning upstream and avoids the small-files
@@ -68,13 +73,25 @@ _COMMIT_RETRIES = 50
 
 
 class TxnLogTable:
-    """Commit log + snapshot resolution for one table location."""
+    """Commit log + snapshot resolution for one table location.
+
+    Parsed commits are cached in version order (list index == version),
+    with a per-``app_id`` set of committed batch ids. The first refresh
+    lists the log directory once and checks the versions run
+    contiguously from 0; every later refresh probes forward from the
+    cached head and reads only the commits past it. Versions stay
+    contiguous by construction — :meth:`append_commit` only ever claims
+    head+1 — so the probe needs no listing. Keep one instance per
+    writer to carry the cache across batches; a fresh instance replays
+    the whole log once."""
 
     def __init__(self, spark: SparkSession, location: str):
         self.spark = spark
         self.location = location.rstrip("/")
         self._jvm = spark.sparkContext._jvm
         self._hconf = spark.sparkContext._jsc.hadoopConfiguration()
+        self._commits: list[dict] | None = None  # None until the first listing
+        self._batch_ids: dict[str, set[int]] = {}
 
     # -- Hadoop FS plumbing (works on any DFS, same as the native
     #    provider's StagedBatchPublisher) --------------------------------
@@ -88,18 +105,6 @@ class TxnLogTable:
         return f"{self.location}/{_LOG_DIR}/{version:020d}.json"
 
     # -- log reading -----------------------------------------------------
-    def versions(self) -> list[int]:
-        fs = self._fs()
-        log_dir = self._path(f"{self.location}/{_LOG_DIR}")
-        if not fs.exists(log_dir):
-            return []
-        out = []
-        for st in fs.listStatus(log_dir):
-            name = st.getPath().getName()
-            if name.endswith(".json"):
-                out.append(int(name[: -len(".json")]))
-        return sorted(out)
-
     def read_commit(self, version: int) -> dict:
         fs = self._fs()
         stream = fs.open(self._path(self._log_path(version)))
@@ -107,14 +112,62 @@ class TxnLogTable:
         stream.close()
         return json.loads(raw)
 
+    def _remember(self, commit: dict) -> None:
+        self._commits.append(commit)
+        if "batch_id" in commit:
+            self._batch_ids.setdefault(commit.get("app_id"), set()).add(
+                commit["batch_id"]
+            )
+
+    def _refresh(self) -> list[dict]:
+        """Bring the cache up to the log's current head; returns it."""
+        fs = self._fs()
+        if self._commits is None:
+            log_dir = self._path(f"{self.location}/{_LOG_DIR}")
+            listed = sorted(
+                int(st.getPath().getName()[: -len(".json")])
+                for st in (fs.listStatus(log_dir) if fs.exists(log_dir) else [])
+                if st.getPath().getName().endswith(".json")
+            )
+            if listed != list(range(len(listed))):
+                missing = sorted(set(range(listed[-1] + 1)) - set(listed))
+                raise TxnLogError(
+                    f"commit log at {self.location} is not contiguous: "
+                    f"version(s) {missing[:5]} missing below {listed[-1]}"
+                )
+            self._commits = []
+            for v in listed:
+                self._remember(self.read_commit(v))
+        while fs.exists(self._path(self._log_path(len(self._commits)))):
+            self._remember(self.read_commit(len(self._commits)))
+        return self._commits
+
+    def versions(self) -> list[int]:
+        return list(range(len(self._refresh())))
+
     def commits(self) -> list[dict]:
-        return [self.read_commit(v) for v in self.versions()]
+        return list(self._refresh())
 
     def committed_batch_ids(self, app_id: str) -> set[int]:
         """The idempotency check — Delta's txn appId/version lookup."""
-        return {
-            c["batch_id"] for c in self.commits() if c.get("app_id") == app_id
-        }
+        self._refresh()
+        return set(self._batch_ids.get(app_id, ()))
+
+    def commits_after(self, version: int) -> list[dict]:
+        """The commits past ``version``, found by probing forward from
+        it: no listing and no read of earlier commits (a change-feed
+        poll). Bypasses the cache."""
+        fs = self._fs()
+        out: list[dict] = []
+        v = max(version, -1) + 1
+        while fs.exists(self._path(self._log_path(v))):
+            out.append(self.read_commit(v))
+            v += 1
+        return out
+
+    def head(self) -> int:
+        """The version the next commit claims, as of the last refresh."""
+        return len(self._commits or ())
 
     # -- committing ------------------------------------------------------
     def try_commit(self, version: int, commit: dict) -> bool:
@@ -131,6 +184,8 @@ class TxnLogTable:
         body["version"] = version
         out.write(bytearray(json.dumps(body).encode("utf-8")))
         out.close()
+        if self._commits is not None and version == len(self._commits):
+            self._remember(body)  # we wrote it: no need to read it back
         return True
 
     def append_commit(self, app_id: str, batch_id: int, add: list[dict]) -> int | None:
@@ -138,17 +193,17 @@ class TxnLogTable:
         version, or None when (app_id, batch_id) is already in the log
         (idempotent replay — nothing to do)."""
         for _ in range(_COMMIT_RETRIES):
-            vs = self.versions()
             if batch_id in self.committed_batch_ids(app_id):
                 return None
-            next_v = (vs[-1] + 1) if vs else 0
+            version = self.head()
             if self.try_commit(
-                next_v, {"app_id": app_id, "batch_id": batch_id, "add": add}
+                version, {"app_id": app_id, "batch_id": batch_id, "add": add}
             ):
-                return next_v
-            # collision: someone committed next_v between the read and
-            # the create — loop re-reads (and re-checks idempotency:
-            # the winner may have been this batch's pre-crash attempt)
+                return version
+            # collision: someone committed this version between the
+            # refresh and the create — loop refreshes (reading only the
+            # new commits) and re-checks idempotency: the winner may
+            # have been this batch's pre-crash attempt
         raise TxnLogError(
             f"commit contention: {_COMMIT_RETRIES} consecutive version "
             f"collisions at {self.location} — too many concurrent writers"
@@ -163,10 +218,11 @@ class TxnLogTable:
         TIME TRAVEL, free because the log is immutable; a historical
         snapshot stays readable until vacuum reclaims files the CURRENT
         snapshot no longer references."""
+        commits = self._refresh()
+        if as_of_version is not None:
+            commits = commits[: max(as_of_version + 1, 0)]
         live: dict[str, dict] = {}
-        for c in self.commits():
-            if as_of_version is not None and c["version"] > as_of_version:
-                break
+        for c in commits:
             for rel in c.get("remove", []):
                 live.pop(rel, None)
             for a in c.get("add", []):
@@ -278,26 +334,10 @@ class TxnLogPublisher:
         # collides with (or resumes) the dead attempt's files — those
         # stay unreferenced by any commit, hence invisible, until vacuum
         rel_dir = f"{_DATA_DIR}/b{batch_id}-{uuid.uuid4().hex[:12]}"
-        out_dir = f"{log.location}/{rel_dir}"
-        aligned.write.mode("errorifexists").format("parquet").save(out_dir)
-        fs = log._fs()
-        out_q = fs.makeQualified(log._path(out_dir)).toString()
-        add: list[dict] = []
-        it = fs.listFiles(log._path(out_dir), True)
-        while it.hasNext():
-            st = it.next()
-            p = st.getPath()
-            if p.getName().startswith(("_", ".")):
-                continue
-            rel = fs.makeQualified(p).toString()[len(out_q) :].lstrip("/")
-            entry: dict = {
-                "path": f"{rel_dir}/{rel}",
-                "size": st.getLen(),
-            }
-            stats = _file_stats(f"{log.location}/{rel_dir}/{rel}", self.part_cols)
-            if stats:
-                entry["stats"] = stats
-            add.append(entry)
+        aligned.write.mode("errorifexists").format("parquet").save(
+            f"{log.location}/{rel_dir}"
+        )
+        add = _list_add_entries(log, rel_dir, self.part_cols)
         version = log.append_commit(self.scope, batch_id, add)
         return {
             "n_files": len(add),
@@ -406,47 +446,30 @@ def compact_txnlog_table(
     old_rel = [a["path"] for a in adds]
     files = [f"{log.location}/{p}" for p in old_rel]
     rel_dir = f"{_DATA_DIR}/compact-{uuid.uuid4().hex[:12]}"
-    out_dir = f"{log.location}/{rel_dir}"
     (
         spark.read.schema(schema)
         .parquet(*files)
         .repartition(n_out)
         .write.mode("errorifexists")
         .format("parquet")
-        .save(out_dir)
+        .save(f"{log.location}/{rel_dir}")
     )
-    fs = log._fs()
-    out_q = fs.makeQualified(log._path(out_dir)).toString()
-    new_add: list[dict] = []
-    it = fs.listFiles(log._path(out_dir), True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath()
-        if p.getName().startswith(("_", ".")):
-            continue
-        rel = fs.makeQualified(p).toString()[len(out_q) :].lstrip("/")
-        entry: dict = {"path": f"{rel_dir}/{rel}", "size": st.getLen()}
-        stats = _file_stats(f"{log.location}/{rel_dir}/{rel}", part_cols or [])
-        if stats:
-            entry["stats"] = stats
-        new_add.append(entry)
+    new_add = _list_add_entries(log, rel_dir, part_cols or [])
     retire = set(old_rel)
     for _ in range(_COMMIT_RETRIES):
-        vs = log.versions()
-        live = {a["path"] for a in log.snapshot_adds()}
+        live = {a["path"] for a in log.snapshot_adds()}  # refreshes the head
         if not retire <= live:
             raise TxnLogError(
                 "concurrent compaction retired files this compaction was "
                 f"rewriting ({sorted(retire - live)[:3]}...); re-run against "
                 "the new snapshot"
             )
-        next_v = (vs[-1] + 1) if vs else 0
         if log.try_commit(
-            next_v,
+            log.head(),
             {"compaction": True, "add": new_add, "remove": sorted(retire)},
         ):
             return {"files_before": len(adds), "files_after": len(new_add)}
-        # version collision (an append landed): re-read and retry
+        # version collision (an append landed): refresh and retry
     raise TxnLogError(
         f"compaction commit contention: {_COMMIT_RETRIES} consecutive "
         f"version collisions at {log.location}"
@@ -476,12 +499,10 @@ def read_txnlog_table_changes(
     spark.catalog.refreshTable(qualified)
     schema = spark.table(qualified).schema
     log = TxnLogTable(spark, _table_location(spark, qualified))
-    versions = [v for v in log.versions() if v > since_version]
+    commits = log.commits_after(since_version)
+    high = since_version + len(commits)
     files: list[str] = []
-    high = since_version
-    for v in versions:
-        c = log.read_commit(v)
-        high = v
+    for c in commits:
         if c.get("compaction"):
             continue  # rewrite, not new data
         files.extend(f"{log.location}/{a['path']}" for a in c.get("add", []))
@@ -604,8 +625,8 @@ def merge_txnlog_table(
         > 0
     )
     for _ in range(_COMMIT_RETRIES):
-        vs = log.versions()
-        live = {a["path"] for a in log.snapshot_adds()}
+        live = {a["path"] for a in log.snapshot_adds()}  # refreshes the head
+        next_v = log.head()
         if not retire <= live:
             raise TxnLogError(
                 "concurrent commit retired files this merge was rewriting "
@@ -637,7 +658,6 @@ def merge_txnlog_table(
                     "...); re-run the merge against the new snapshot"
                 )
             snap0 = live  # probed clean — don't re-probe these files
-        next_v = (vs[-1] + 1) if vs else 0
         if log.try_commit(
             next_v,
             {"merge": True, "add": new_add, "remove": sorted(retire)},

@@ -393,6 +393,60 @@ def test_arrow_writer_null_and_special_partition_values(spark, tmp_path):
     assert got == [(1, "click"), (2, None), (3, "a/b=c"), (4, "click")]
 
 
+@pytest.mark.parametrize("crash_after_renames", [1, None])
+def test_arrow_writer_crash_before_marker_replays_exactly_once(
+    spark, tmp_path, monkeypatch, crash_after_renames
+):
+    """A crash inside commit, after some or all staged files were
+    renamed but before the batch marker: Spark aborts the attempt, the
+    replay stages the same rows under new file names, and the table
+    still ends up with exactly one copy of the batch."""
+    import pyarrow as pa
+
+    from spark_hive_streaming_sink_spark.sources import hive_streaming_datasource as H
+
+    root = str(tmp_path / "tbl")
+    w = H.HiveStreamingArrowWriter(root, ["event_type"], ["event_id", "event_type"])
+    batch = pa.record_batch(
+        {
+            "event_id": pa.array([1, 2, 3, 4], type=pa.int64()),
+            "event_type": pa.array(["click", "view", "buy", "click"]),
+        }
+    )
+    msg = w.write(iter([batch]))
+    assert len(msg.files) == 3
+    if crash_after_renames is None:  # every rename done, marker not
+        def crash(batch_id):
+            raise RuntimeError("injected crash before marker")
+
+        monkeypatch.setattr(w, "_write_marker", crash)
+    else:  # crash inside the rename loop
+        done = {"n": 0}
+        real_rename = os.rename
+
+        def rename(src, dst):
+            if done["n"] == crash_after_renames:
+                raise RuntimeError("injected crash before marker")
+            done["n"] += 1
+            real_rename(src, dst)
+
+        monkeypatch.setattr(H.os, "rename", rename)
+    with pytest.raises(RuntimeError, match="before marker"):
+        w.commit([msg], batchId=0)
+    w.abort([msg], batchId=0)  # what Spark does after a failed commit
+    monkeypatch.undo()
+
+    replay = w.write(iter([batch]))  # same rows, fresh file names
+    w.commit([replay], batchId=0)
+    got = sorted(
+        r.event_id for r in spark.read.parquet(root).select("event_id").collect()
+    )
+    assert got == [1, 2, 3, 4]
+    assert os.path.exists(w._marker(0)) and not os.path.exists(w._manifest(0))
+    leftover = [f for _d, _s, fs in os.walk(os.path.join(root, "_staging")) for f in fs]
+    assert leftover == []
+
+
 def test_shared_ledger_dir_no_cross_query_collision(spark, tmp_path):
     """Two queries into two tables sharing one ledger.dir must not skip
     each other's batches (markers are namespaced per destination —
@@ -677,6 +731,80 @@ def test_null_partition_value_routes_to_default_partition(spark, tmp_path):
     spark.catalog.refreshTable(opts.qualified_name)
     rows = {r["event_id"]: r["event_type"] for r in spark.table(opts.qualified_name).collect()}
     assert rows == {1: "click", 2: None}
+
+
+def _count_sql(monkeypatch):
+    """Record every SQL statement any session issues."""
+    from pyspark.sql import SparkSession
+
+    stmts: list[str] = []
+    orig = SparkSession.sql
+
+    def sql(self, query, *a, **kw):
+        stmts.append(query)
+        return orig(self, query, *a, **kw)
+
+    monkeypatch.setattr(SparkSession, "sql", sql)
+    return stmts
+
+
+def test_sixteen_partitions_register_in_one_alter_table(spark, monkeypatch):
+    """A batch touching 16 partitions registers them all with ONE
+    ALTER TABLE, and a writer's later batches issue no other SQL (the
+    destination's location and format are resolved once)."""
+    table, base = _mk_table(spark)  # partitioned by event_type
+    opts = HiveSinkOptions(db="default", table=table)
+    part_cols = validate_destination(
+        spark, ["event_id", "user_id", "value", "event_type"], opts
+    )
+    writer = make_batch_writer(
+        opts, part_cols, BatchCommitLedger(os.path.join(base, "ledger")), []
+    )
+    mk = lambda b: spark.createDataFrame(
+        [(b * 100 + i, i, float(i), f"t{i:02d}") for i in range(16)],
+        "event_id long, user_id long, value double, event_type string",
+    )
+    stmts = _count_sql(monkeypatch)
+    writer(mk(0), 0)
+    alters = [s for s in stmts if s.lstrip().upper().startswith("ALTER TABLE")]
+    assert len(alters) == 1, alters
+    del stmts[:]
+    writer(mk(1), 1)  # same 16 partitions, already registered
+    assert len(stmts) == 1 and stmts[0].lstrip().upper().startswith("ALTER TABLE")
+    monkeypatch.undo()
+    shown = {p for (p,) in spark.sql(f"SHOW PARTITIONS {table}").collect()}
+    assert shown == {f"event_type=t{i:02d}" for i in range(16)}
+    spark.catalog.refreshTable(table)
+    assert spark.table(table).count() == 32
+
+
+def test_mixed_null_and_value_partitions_both_registered(spark):
+    """One batch with NULL and non-NULL partition values: the values go
+    through the single ALTER TABLE, the NULL through partition
+    recovery, and every row reads back."""
+    table, base = _mk_table(spark)
+    opts = HiveSinkOptions(db="default", table=table)
+    part_cols = validate_destination(
+        spark, ["event_id", "user_id", "value", "event_type"], opts
+    )
+    writer = make_batch_writer(
+        opts, part_cols, BatchCommitLedger(os.path.join(base, "ledger")), []
+    )
+    writer(
+        spark.createDataFrame(
+            [(1, 10, 1.5, "click"), (2, 11, 2.5, None), (3, 12, 3.5, "view")],
+            "event_id long, user_id long, value double, event_type string",
+        ),
+        0,
+    )
+    shown = {p for (p,) in spark.sql(f"SHOW PARTITIONS {table}").collect()}
+    assert shown == {
+        "event_type=click", "event_type=view",
+        "event_type=__HIVE_DEFAULT_PARTITION__",
+    }
+    spark.catalog.refreshTable(table)
+    rows = {r["event_id"]: r["event_type"] for r in spark.table(table).collect()}
+    assert rows == {1: "click", 2: None, 3: "view"}
 
 
 def test_staging_path_scoped_per_query(spark, tmp_path):

@@ -173,6 +173,107 @@ def test_txnlog_version_collision_retries_to_next_version(spark):
     assert log.committed_batch_ids("other") == {0, 1}
 
 
+def _txnlog_writer(spark, table, base, scope):
+    opts = HiveSinkOptions.from_options(
+        {"db": "default", "table": table, "table.format": "txnlog"}
+    )
+    part_cols = validate_destination(
+        spark, ["event_id", "user_id", "value", "event_type"], opts
+    )
+    ledger = BatchCommitLedger(os.path.join(base, "ledger"))
+    return make_batch_writer(opts, part_cols, ledger, [], scope=scope)
+
+
+def _small_batch(spark, i):
+    return spark.createDataFrame(
+        [(i * 10 + j, j, float(j), "click") for j in range(3)],
+        "event_id long, user_id long, value double, event_type string",
+    )
+
+
+def test_txnlog_writer_commit_reads_do_not_grow_with_log(spark, monkeypatch):
+    """One writer carries its parsed commit log across batches: a
+    batch reads only the commits that landed since the previous one,
+    so the per-batch read count stays flat as the log grows."""
+    table, loc, base = _mk_table(spark)
+    writer = _txnlog_writer(spark, table, base, f"default.{table}.q1")
+    reads = {"n": 0}
+    orig = TxnLogTable.read_commit
+
+    def counted(self, version):
+        reads["n"] += 1
+        return orig(self, version)
+
+    monkeypatch.setattr(TxnLogTable, "read_commit", counted)
+    per_batch = []
+    for b in range(12):
+        before = reads["n"]
+        writer(_small_batch(spark, b), b)
+        per_batch.append(reads["n"] - before)
+    assert per_batch[-1] <= per_batch[0] <= 2, per_batch
+    monkeypatch.undo()
+    log = TxnLogTable(spark, loc)
+    assert [c["batch_id"] for c in log.commits()] == list(range(12))
+    assert read_txnlog_table(spark, "default", table).count() == 36
+
+
+def test_txnlog_writer_sees_foreign_commit_between_batches(spark, monkeypatch):
+    """A commit by another log instance between two batches of one
+    writer: the writer's next batch lands after it, a replay of an
+    already-committed batch adds nothing, and both instances agree on
+    the committed batch ids."""
+    table, loc, base = _mk_table(spark)
+    scope = f"default.{table}.q1"
+    writer = _txnlog_writer(spark, table, base, scope)
+    seen = []
+    orig = TxnLogTable.append_commit
+
+    def spy(self, app_id, batch_id, add):
+        if app_id == scope:
+            seen.append(self)  # the writer's own log instance
+        return orig(self, app_id, batch_id, add)
+
+    monkeypatch.setattr(TxnLogTable, "append_commit", spy)
+    writer(_small_batch(spark, 0), 0)
+    foreign = TxnLogTable(spark, loc)
+    assert foreign.append_commit("other", 0, []) == 1
+    writer(_small_batch(spark, 1), 1)
+    writer(_small_batch(spark, 0), 0)  # replay: already in the log
+    monkeypatch.undo()
+
+    (mine,) = set(seen)
+    assert mine is not foreign
+    commits = TxnLogTable(spark, loc).commits()
+    assert [(c["app_id"], c["batch_id"]) for c in commits] == [
+        (scope, 0), ("other", 0), (scope, 1),
+    ]
+    for app in (scope, "other"):
+        assert mine.committed_batch_ids(app) == foreign.committed_batch_ids(app)
+    assert foreign.committed_batch_ids(scope) == {0, 1}
+    assert read_txnlog_table(spark, "default", table).count() == 6
+
+
+def test_txnlog_gap_in_log_refuses_to_commit(spark):
+    """A log with a missing version is corrupt: the first refresh
+    raises instead of committing into the gap."""
+    from spark_hive_streaming_sink_spark.streaming.txnlog import TxnLogError
+
+    table, loc, base = _mk_table(spark)
+    seed = TxnLogTable(spark, loc)
+    assert seed.try_commit(0, {"app_id": "other", "batch_id": 0, "add": []})
+    assert seed.try_commit(2, {"app_id": "other", "batch_id": 2, "add": []})
+    with pytest.raises(TxnLogError, match="not contiguous"):
+        TxnLogTable(spark, loc).append_commit("me", 0, [])
+    writer = _txnlog_writer(spark, table, base, "me")
+    with pytest.raises(TxnLogError, match="not contiguous"):
+        writer(_small_batch(spark, 0), 0)
+    log_files = sorted(  # skip LocalFileSystem's .crc sidecars
+        n for n in os.listdir(os.path.join(loc, "_shss_txnlog"))
+        if n.endswith(".json") and not n.startswith(".")
+    )
+    assert log_files == [f"{v:020d}.json" for v in (0, 2)]
+
+
 def test_txnlog_stats_skipping_prunes_files_never_wrong(spark):
     """Per-file partition-column min/max recorded at publish prunes
     files on equality predicates; files without stats are always kept."""
