@@ -909,39 +909,6 @@ FP_FRAME = 8  # samples per fingerprint frame (8 frames per clip)
 FP_BANDS = 4  # sub-band loudness cells per frame (2 samples each)
 FP_BAND_W = FP_FRAME // FP_BANDS
 
-FP_SCHEMA = "doc_id long, frame_idx int, band int, loud long"
-
-
-def fingerprint_band_loudness(payloads: DataFrame) -> DataFrame:
-    """mapInPandas kernel: real WAV decode → exact integer loudness
-    (sum |PCM16|) per (frame, band) cell — the time-frequency grid a
-    real fingerprinter fills with filterbank energies (swap this body
-    for an FFT band decomposition on real audio; the Spark plumbing
-    and the hash assembly are unchanged)."""
-    import pandas as pd
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                _rate, n, s = decode_wav(bytes(p))
-                for f in range(n // FP_FRAME):
-                    for b in range(FP_BANDS):
-                        lo = f * FP_FRAME + b * FP_BAND_W
-                        rows.append(
-                            (
-                                doc_id,
-                                f,
-                                b,
-                                sum(abs(x) for x in s[lo : lo + FP_BAND_W]),
-                            )
-                        )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "band", "loud"]
-            )
-
-    return payloads.mapInPandas(kernel, FP_SCHEMA)
-
 
 def audio_fingerprints(payloads: DataFrame) -> DataFrame:
     """mapInPandas kernel: real WAV decode → ONE (doc_id, fingerprint)

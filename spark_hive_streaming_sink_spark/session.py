@@ -16,6 +16,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory in whole GiB (at least 1g): local
+    mode runs everything in the driver JVM, and a heap sized past the
+    host's memory would let it grow until the OS kills it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys // 2 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "spark-hive-streaming-sink-spark",
     cpus: int | str | None = None,
@@ -48,7 +56,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         # local mode = driver-only JVM; this is the one memory knob
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         # A long-lived session compiles one generated class per
         # whole-stage-codegen subtree; at the JVM's default ~240 MB
         # ReservedCodeCacheSize a many-query session exhausts the code

@@ -25,13 +25,16 @@ Where we deliberately diverge (SURVEY.md §1.4, §7):
   table's own ``_shss_staging`` dir, durably record a rename manifest,
   then publish via idempotent per-file renames → exactly-once table
   contents at EVERY crash point (a replay resumes the manifest instead
-  of re-appending). The batch-id ledger marker remains the fast
-  replay-skip path; correctness no longer depends on its timing.
+  of re-appending). The publisher's batch-id ledger marker is the fast
+  replay-skip path; correctness does not depend on its timing.
 - Hive ACID/bucketed ORC is a Hive-side storage feature OSS Spark
   cannot write; destinations are Spark-managed partitioned tables
-  behind a pluggable table-format seam (see ``TABLE_FORMAT_PROVIDERS``)
-  whose default provider maps the reference's ACID guarantees onto the
-  staged-rename protocol.
+  behind a table-format seam with two providers (see
+  ``TABLE_FORMAT_PROVIDERS``): ``native`` maps the reference's ACID
+  guarantees onto the staged-rename protocol, ``txnlog`` onto a commit
+  log. Both publishers share one contract — ``publish(aligned,
+  batch_id)`` returns the batch's stats, or None for a replay — so the
+  per-batch writer has one publish path.
 
 Scale posture: each micro-batch is repartitioned by the destination's
 partition columns before insert so one task owns one output partition
@@ -201,8 +204,11 @@ class BatchCommitLedger:
     upgrade over the reference's no-op epoch commit
     (``HiveStreamWriter.scala:39-41``).
 
-    Markers are empty files ``<dir>/<scope>/batch-<id>`` created
-    *after* the batch's job commit. ``scope`` namespaces the markers:
+    Markers are small files ``<dir>/<scope>/batch-<id>`` that
+    :meth:`StagedBatchPublisher.publish` creates *after* the batch's
+    renames; the directory is made on the first marker, so a query
+    that never records one (the ``txnlog`` provider, whose commit log
+    is its replay anchor) leaves none. ``scope`` namespaces the markers:
     ``ledger.dir`` is documented as shareable and checkpoint-outliving,
     so two queries (or one query re-pointed at a different table)
     using the same directory must not collide on bare batch ids —
@@ -222,7 +228,6 @@ class BatchCommitLedger:
 
     def __init__(self, ledger_dir: str, scope: str = "_global"):
         self.dir = os.path.join(ledger_dir, _slug(scope))
-        os.makedirs(self.dir, exist_ok=True)
 
     def _marker(self, batch_id: int) -> str:
         return os.path.join(self.dir, f"batch-{batch_id}")
@@ -231,6 +236,7 @@ class BatchCommitLedger:
         return os.path.exists(self._marker(batch_id))
 
     def record(self, batch_id: int) -> None:
+        os.makedirs(self.dir, exist_ok=True)
         with open(self._marker(batch_id), "w") as f:
             f.write("committed\n")
 
@@ -277,6 +283,8 @@ class StagedBatchPublisher:
 
     Protocol (every step idempotent under replay of the whole batch):
 
+    0. **Replay check**: a batch whose ledger marker exists is already
+       in the table — reclaim its staging dir and skip it.
     1. **Stage**: write the aligned batch in the DESTINATION's own file
        format (catalog ``Provider`` — the reference's tables are ORC,
        ``HiveStreamingExample.scala:26-31``) under the table's
@@ -296,6 +304,8 @@ class StagedBatchPublisher:
        exists is a resumed replay — skip it. New partition directories
        are registered with ``ALTER TABLE ADD IF NOT EXISTS PARTITION``
        (idempotent).
+    4. **Finish**: refresh the table's cached file index, write the
+       ledger marker, then drop the staging dir.
 
     Crash anywhere before the manifest → replay re-stages (overwrite)
     and nothing reached the table. Crash during/after publish → replay
@@ -325,11 +335,13 @@ class StagedBatchPublisher:
         spark: SparkSession,
         qualified: str,
         part_cols: list[str],
+        ledger: BatchCommitLedger,
         scope: str | None = None,
     ):
         self.spark = spark
         self.qualified = qualified
         self.part_cols = part_cols
+        self.ledger = ledger
         # the staging path MUST carry the same scope as the ledger: a
         # bare batch-<id> path would let a stale manifest from a crashed
         # run under a DIFFERENT query name / fresh checkpoint (batch ids
@@ -366,9 +378,22 @@ class StagedBatchPublisher:
     def _staging(self, batch_id: int) -> str:
         return f"{self.location}/_shss_staging/{_slug(self.scope)}/batch-{batch_id}"
 
-    def publish(self, aligned: DataFrame, batch_id: int) -> dict:
+    def publish(self, aligned: DataFrame, batch_id: int) -> dict | None:
+        """Returns ``{n_files, bytes}`` for a fresh publish, None for a
+        replay skip."""
+        if self.ledger.committed(batch_id):
+            # the pre-crash attempt may have died between marker and cleanup
+            self.cleanup(batch_id)
+            return None
         entries = self._ensure_staged(aligned, batch_id)
         self._publish_entries(entries, batch_id)
+        # invalidate this session's cached file index; NB foreachBatch runs
+        # in a CLONED session, so concurrent readers in other sessions of an
+        # UNPARTITIONED table must refreshTable themselves before reading
+        # (partitioned tables see new data via partition metadata)
+        self.spark.catalog.refreshTable(self.qualified)
+        self.ledger.record(batch_id)
+        self.cleanup(batch_id)
         sizes = [e[2] for e in entries if len(e) > 2]
         return {
             "n_files": len(entries),
@@ -499,7 +524,7 @@ class StagedBatchPublisher:
 #       isolation    = single-writer-per-destination contract (below)
 #       durability   = data files + manifest + ledger on the DFS
 #   txnlog — self-contained transaction-log format (r10, VERDICT r9
-#       item 2): the Delta/Iceberg commit model without an external
+#       item 2): a lakehouse-style commit model without an external
 #       runtime. Data files land invisibly under the underscore-hidden
 #       `_shss_data/`; ONE atomic exclusive-create of a commit file
 #       makes them visible to snapshot readers; the commit carries
@@ -507,22 +532,7 @@ class StagedBatchPublisher:
 #       ledger, and racing writers collide on the version file —
 #       optimistic concurrency, the isolation Hive ACID's metastore
 #       locks give the reference. See streaming/txnlog.py.
-#   delta — OSS Delta Lake when `delta-spark` is on the class/pip path:
-#       publish maps onto Delta's idempotent-writes contract
-#       (`option("txnAppId", scope).option("txnVersion", batch_id)`),
-#       so a replayed micro-batch is dropped by Delta's own log. Not
-#       bundled in this environment; selecting it without the runtime
-#       raises with setup guidance rather than silently degrading.
-TABLE_FORMAT_PROVIDERS = {"native", "txnlog", "delta"}
-
-
-def _delta_available() -> bool:
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
+TABLE_FORMAT_PROVIDERS = {"native", "txnlog"}
 
 
 def _resolve_provider(options: "HiveSinkOptions") -> str:
@@ -534,15 +544,6 @@ def _resolve_provider(options: "HiveSinkOptions") -> str:
             "seam maps the batch publish onto the format's native "
             "transactional commit (see TABLE_FORMAT_PROVIDERS)"
         )
-    if provider == "delta" and not _delta_available():
-        raise HiveStreamingSinkError(
-            "table.format 'delta' needs the delta-spark runtime "
-            "(pip install delta-spark, plus "
-            "spark.sql.extensions=io.delta.sql.DeltaSparkSessionExtension "
-            "and the DeltaCatalog on the session) — it is not bundled in "
-            "this environment. Use table.format 'txnlog' for the same "
-            "commit-log guarantees without an external runtime"
-        )
     return provider
 
 
@@ -550,25 +551,27 @@ def make_batch_writer(
     options: HiveSinkOptions,
     part_cols: list[str],
     ledger: BatchCommitLedger,
-    stream_columns: list[str],
     scope: str | None = None,
     lease: "WriterLease | None" = None,
     txn_app_id: str | None = None,
     metrics: "SinkMetrics | None" = None,
 ):
-    """Build the foreachBatch callable: ledger check → column align →
-    staged exactly-once publish → ledger record → staging cleanup.
+    """Build the foreachBatch callable: lease renew → pre-publish checks
+    → column align → one exactly-once publish → one metrics record.
 
     Replaces the reference's per-row path (extract partition values →
     JSON-encode → HiveWriter.write, ``HiveStreamDataWriter.scala:72-106``)
     with one staged columnar parquet job per micro-batch.
 
-    The provider's publisher is built on the first batch and reused for
-    the writer's life: the destination's location and format are
-    resolved once, and a txnlog publisher keeps its parsed commit log
-    between batches, so a batch reads only the commits that landed
-    since the previous one. A new query builds a new writer and starts
-    from an empty cache.
+    Each provider's publisher owns its replay check: the native one
+    skips a batch whose ``ledger`` marker exists, the txnlog one a
+    batch its commit log already holds (``ledger`` is unused there).
+    The publisher is built on the first batch and reused for the
+    writer's life: the destination's location and format are resolved
+    once, and a txnlog publisher keeps its parsed commit log between
+    batches, so a batch reads only the commits that landed since the
+    previous one. A new query builds a new writer and starts from an
+    empty cache.
     """
     provider = _resolve_provider(options)
     publisher = None
@@ -594,7 +597,7 @@ def make_batch_writer(
                 )
             else:
                 publisher = StagedBatchPublisher(
-                    spark, options.qualified_name, part_cols, scope=scope
+                    spark, options.qualified_name, part_cols, ledger, scope=scope
                 )
         return publisher
 
@@ -607,13 +610,6 @@ def make_batch_writer(
             # fencing FIRST: a writer that lost its lease to a takeover
             # must fail the batch before touching the destination
             lease.renew()
-        if provider == "native" and ledger.committed(batch_id):
-            # replayed batch — exactly-once skip; reclaim staging if the
-            # pre-crash attempt died between marker and cleanup.
-            # (log-backed providers skip via their own commit log below —
-            # the log, not the ledger, is their correctness anchor)
-            get_publisher(spark).cleanup(batch_id)
-            return
         if part_cols and not options.auto_create_partitions:
             # HiveOptions.scala:35 / HiveWriter.scala:44 — with
             # auto.create.partitions=false the reference's Hive endpoint
@@ -641,7 +637,7 @@ def make_batch_writer(
             # Existing data files simply lack the column; every reader
             # here scans with the explicit catalog schema, under which a
             # missing parquet column reads as NULL — the same contract
-            # Delta/Iceberg evolution relies on. Partition columns can't
+            # lakehouse-format evolution relies on. Partition columns can't
             # be added this way (routing/layout would change under
             # committed files).
             have = {
@@ -700,56 +696,13 @@ def make_batch_writer(
         if part_cols:
             # one task per output partition → bounded file counts
             aligned = aligned.repartition(*[F.col(c) for c in part_cols])
-        if provider == "txnlog":
-            stats = get_publisher(spark).publish(aligned, batch_id)
-            ledger.record(batch_id)  # fast-path skip; the log is the anchor
-            if metrics is not None:
-                metrics.record(batch_id, {
-                    "provider": "txnlog",
-                    "wall_ms": int((_time.time() - t0) * 1000),
-                    **(stats or {}),
-                })
-            return
-        if provider == "delta":
-            # Delta's idempotent-writes contract: the txn
-            # (appId, version) pair is recorded in Delta's own log and a
-            # replayed (appId, version) append is dropped by Delta —
-            # exactly the role the txnlog commit plays above.
-            (
-                aligned.write.format("delta")
-                .mode("append")
-                .option("txnAppId", txn_app_id or scope or options.qualified_name)
-                .option("txnVersion", batch_id)
-                .save(_table_location(spark, options.qualified_name))
-            )
-            ledger.record(batch_id)
-            if metrics is not None:
-                metrics.record(
-                    batch_id,
-                    {
-                        "provider": "delta",
-                        "wall_ms": int((_time.time() - t0) * 1000),
-                    },
-                )
-            return
-        native = get_publisher(spark)
-        stats = native.publish(aligned, batch_id)
-        # invalidate this session's cached file index; NB foreachBatch runs
-        # in a CLONED session, so concurrent readers in other sessions of an
-        # UNPARTITIONED table must refreshTable themselves before reading
-        # (partitioned tables see new data via partition metadata)
-        spark.catalog.refreshTable(options.qualified_name)
-        ledger.record(batch_id)
-        native.cleanup(batch_id)
-        if metrics is not None:
-            metrics.record(
-                batch_id,
-                {
-                    "provider": "native",
-                    "wall_ms": int((_time.time() - t0) * 1000),
-                    **(stats or {}),
-                },
-            )
+        stats = get_publisher(spark).publish(aligned, batch_id)
+        if stats is not None and metrics is not None:
+            metrics.record(batch_id, {
+                "provider": provider,
+                "wall_ms": int((_time.time() - t0) * 1000),
+                **stats,
+            })
 
     return write_batch
 
@@ -949,11 +902,12 @@ def write_stream_to_table(
     """The engine's ``writeStream.format("hive-streaming")`` equivalent.
 
     ``df`` must be a streaming DataFrame; ``options`` carry the
-    reference's option names (``db``, ``table``, ...). The ledger lives
-    next to the checkpoint so recovery sees it; pass ``ledger.dir`` to
-    pin it elsewhere — a ledger that outlives the checkpoint keeps the
-    table exactly-once even across a checkpoint reset (losing the
-    checkpoint must not double-load the destination). Markers are
+    reference's option names (``db``, ``table``, ...). The native
+    provider's ledger lives next to the checkpoint so recovery sees it;
+    pass ``ledger.dir`` to pin it elsewhere — a ledger that outlives the
+    checkpoint keeps the table exactly-once even across a checkpoint
+    reset (losing the checkpoint must not double-load the destination);
+    the txnlog provider writes no ledger. Markers are
     namespaced per destination table + query name inside the ledger
     dir, so a shared ledger.dir is safe across queries writing to
     DIFFERENT tables. Writing the SAME table is single-writer and
@@ -965,9 +919,9 @@ def write_stream_to_table(
     at every crash point: the staged publish's durable manifest makes a
     replayed batch resume its renames instead of re-appending (see
     :class:`StagedBatchPublisher`; the ledger marker is the fast skip
-    path). ``table.format`` selects the destination provider
-    (``parquet`` default; the delta/iceberg seam is documented at
-    ``TABLE_FORMAT_PROVIDERS``).
+    path). ``table.format`` selects the destination provider:
+    ``native`` (default) or ``txnlog``, documented at
+    ``TABLE_FORMAT_PROVIDERS``.
 
     Example::
 
@@ -1004,7 +958,7 @@ def write_stream_to_table(
         _table_location(spark, opts.qualified_name),
         ttl_ms=int(opts.extra.get("writer.lease.ttl.ms", 120_000)),
     )
-    # log-backed providers (txnlog/delta) dedupe replays by
+    # the txnlog provider dedupes replays by
     # (app_id, batch_id) in the DESTINATION's log, which outlives every
     # checkpoint — so the app_id must fingerprint the query INSTANCE:
     # stable across restarts of one checkpoint (those replays must
@@ -1030,7 +984,6 @@ def write_stream_to_table(
                 opts,
                 part_cols,
                 ledger,
-                df.columns,
                 scope=scope,
                 lease=lease,
                 txn_app_id=txn_app_id,

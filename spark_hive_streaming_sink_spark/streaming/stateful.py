@@ -119,103 +119,3 @@ def stream_stateful_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("user_id", "n_events", "total_value", "last_event_type")
     )
-
-
-class _UserTotalsProcessor:
-    """transformWithStateInPandas processor (Spark 4 state API v2):
-    per-user count + exact cent-sum in a ValueState. The modern
-    replacement for applyInPandasWithState above — same generalization
-    of the reference's per-key writer state
-    (``HiveStreamDataWriter.scala:52``), but with typed state handles
-    (value/list/map) and timer support, and state that survives query
-    restarts via the state store."""
-
-    def init(self, handle) -> None:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        self._state = handle.getValueState(
-            "totals",
-            StructType(
-                [
-                    StructField("n", LongType()),
-                    StructField("cents", LongType()),
-                ]
-            ),
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        n, cents = (self._state.get() or (0, 0)) if self._state.exists() else (0, 0)
-        for pdf in rows:
-            n += len(pdf)
-            cents += int(pdf["value_cents"].sum())
-        self._state.update((n, cents))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [cents / 100.0]}
-        )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def _twsip_available() -> bool:
-    """transformWithStateInPandas drives a long-lived Python worker over
-    a protobuf channel; gate on the python protobuf package (absent in
-    some runtimes — applyInPandasWithState above has no such
-    dependency and stays the portable stateful path)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-_TWSIP_ORACLE = """
-    SELECT user_id,
-           COUNT(*) AS n_events,
-           CAST(CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS DOUBLE)
-             / 100.0 AS total_value
-    FROM events GROUP BY user_id
-    """
-
-
-def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arbitrary stateful processing via the Spark 4 state API v2
-    (transformWithStateInPandas + StatefulProcessor): per-user running
-    totals in a typed ValueState; final emission matches the static
-    aggregate."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # subclass dynamically so the module imports even if the API moves
-    proc = type(
-        "UserTotalsProcessor", (_UserTotalsProcessor, StatefulProcessor), {}
-    )()
-    ev = stream_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("value_cents"),
-    )
-    out = ev.groupBy("user_id").transformWithStateInPandas(
-        proc,
-        outputStructType="user_id bigint, n_events bigint, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-    res = run_to_memory(out, mode="update")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        res.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "total_value")
-    )
-
-if _twsip_available():
-    register(
-        "stream_transform_with_state",
-        oracle=_TWSIP_ORACLE,
-        tags=("streaming", "stateful"),
-    )(stream_transform_with_state)

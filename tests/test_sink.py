@@ -124,7 +124,7 @@ def test_batch_replay_idempotent(spark):
     )
     assert part_cols == ["event_type"]
     ledger = BatchCommitLedger(os.path.join(base, "ledger"))
-    writer = make_batch_writer(opts, part_cols, ledger, [])
+    writer = make_batch_writer(opts, part_cols, ledger)
     batch = (
         spark.read.parquet(f"{SF_DIR}/events.parquet")
         .select("event_id", "user_id", "value", "event_type")
@@ -174,7 +174,7 @@ def test_auto_create_partitions_false_rejects_new(spark):
         spark, ["event_id", "user_id", "value", "event_type"], opts
     )
     ledger = BatchCommitLedger(os.path.join(base, "ledger"))
-    writer = make_batch_writer(opts, part_cols, ledger, [])
+    writer = make_batch_writer(opts, part_cols, ledger)
     batch = (
         spark.read.parquet(f"{SF_DIR}/events.parquet")
         .select("event_id", "user_id", "value", "event_type")
@@ -222,7 +222,7 @@ def test_compaction_reduces_files_preserves_rows(spark):
         spark, ["event_id", "user_id", "value", "event_type"], opts
     )
     ledger = BatchCommitLedger(os.path.join(base, "ledger"))
-    writer = make_batch_writer(opts, part_cols, ledger, [])
+    writer = make_batch_writer(opts, part_cols, ledger)
     src = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
         "event_id", "user_id", "value", "event_type"
     )
@@ -241,16 +241,6 @@ def test_compaction_reduces_files_preserves_rows(spark):
     got = sorted(tuple(r) for r in spark.table(table).collect())
     want = sorted(tuple(r) for r in src.collect())
     assert got == want
-
-
-def test_twsip_gating_matches_runtime():
-    """stream_transform_with_state registers iff the python protobuf
-    dependency (required by transformWithStateInPandas's worker
-    channel) is importable — never a registered-but-crashing query."""
-    from spark_hive_streaming_sink_spark.registry import queries
-    from spark_hive_streaming_sink_spark.streaming.stateful import _twsip_available
-
-    assert ("stream_transform_with_state" in queries()) == _twsip_available()
 
 
 def test_upsert_across_separate_batches(spark, tmp_path):
@@ -562,7 +552,7 @@ def _run_events_stream(spark, table, ckpt, ledger):
         "event_id", "user_id", "value", "event_type"
     )
     q = (
-        ev.writeStream.foreachBatch(make_batch_writer(opts, part_cols, ledger, []))
+        ev.writeStream.foreachBatch(make_batch_writer(opts, part_cols, ledger))
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
@@ -632,7 +622,8 @@ def test_crash_mid_publish_resumes_exactly_once(spark, tmp_path):
     ).repartition(*[F.col(c) for c in part_cols])
     expected = src.count()
 
-    publisher = StagedBatchPublisher(spark, opts.qualified_name, part_cols)
+    ledger = BatchCommitLedger(str(tmp_path / "ledger"))
+    publisher = StagedBatchPublisher(spark, opts.qualified_name, part_cols, ledger)
     entries = publisher._ensure_staged(aligned, 0)
     assert len(entries) >= 2, "need multiple files to split the crash"
     # simulated crash: only the first half of the renames happened
@@ -642,18 +633,19 @@ def test_crash_mid_publish_resumes_exactly_once(spark, tmp_path):
     assert 0 < partial < expected
 
     # replay path: manifest still present -> resume, no duplicates
-    publisher.publish(aligned, 0)
-    publisher.cleanup(0)
+    assert publisher.publish(aligned, 0) is not None
     spark.catalog.refreshTable(opts.qualified_name)
     assert spark.table(opts.qualified_name).count() == expected
     assert (
         spark.table(opts.qualified_name).dropDuplicates(["event_id"]).count()
         == expected
     )
-    # and a third publish (late replay after cleanup would be guarded
-    # by the ledger in the writer; here we just assert idempotence of
-    # the already-published half) — every target already exists
-    # because the staging dir is gone, so committed state is final.
+    # the marker is durable now: a late replay is skipped by the
+    # publisher itself and appends nothing
+    assert ledger.committed(0)
+    assert publisher.publish(aligned, 0) is None
+    spark.catalog.refreshTable(opts.qualified_name)
+    assert spark.table(opts.qualified_name).count() == expected
 
 
 def test_crash_after_marker_replays_exactly_once(spark, tmp_path):
@@ -725,9 +717,10 @@ def test_null_partition_value_routes_to_default_partition(spark, tmp_path):
     aligned = batch.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in dest_fields]
     )
-    pub = StagedBatchPublisher(spark, opts.qualified_name, part_cols)
+    pub = StagedBatchPublisher(
+        spark, opts.qualified_name, part_cols, BatchCommitLedger(str(tmp_path / "ledger"))
+    )
     pub.publish(aligned, 0)
-    pub.cleanup(0)
     spark.catalog.refreshTable(opts.qualified_name)
     rows = {r["event_id"]: r["event_type"] for r in spark.table(opts.qualified_name).collect()}
     assert rows == {1: "click", 2: None}
@@ -758,7 +751,7 @@ def test_sixteen_partitions_register_in_one_alter_table(spark, monkeypatch):
         spark, ["event_id", "user_id", "value", "event_type"], opts
     )
     writer = make_batch_writer(
-        opts, part_cols, BatchCommitLedger(os.path.join(base, "ledger")), []
+        opts, part_cols, BatchCommitLedger(os.path.join(base, "ledger"))
     )
     mk = lambda b: spark.createDataFrame(
         [(b * 100 + i, i, float(i), f"t{i:02d}") for i in range(16)],
@@ -788,7 +781,7 @@ def test_mixed_null_and_value_partitions_both_registered(spark):
         spark, ["event_id", "user_id", "value", "event_type"], opts
     )
     writer = make_batch_writer(
-        opts, part_cols, BatchCommitLedger(os.path.join(base, "ledger")), []
+        opts, part_cols, BatchCommitLedger(os.path.join(base, "ledger"))
     )
     writer(
         spark.createDataFrame(
@@ -821,22 +814,24 @@ def test_staging_path_scoped_per_query(spark, tmp_path):
         rows, "event_id long, user_id long, value double, event_type string"
     )
 
+    def publisher(scope):
+        ledger = BatchCommitLedger(str(tmp_path / "ledger"), scope=scope)
+        return StagedBatchPublisher(spark, opts.qualified_name, [], ledger, scope=scope)
+
     # query 1 stages batch 0 and crashes between manifest and publish
-    pub1 = StagedBatchPublisher(spark, opts.qualified_name, [], scope=f"{table}.q1")
+    pub1 = publisher(f"{table}.q1")
     pub1._ensure_staged(mk([(1, 10, 1.0, "a")]), 0)  # durable manifest, unpublished
 
     # query 2 (fresh checkpoint, same table, batch ids restart at 0)
-    pub2 = StagedBatchPublisher(spark, opts.qualified_name, [], scope=f"{table}.q2")
+    pub2 = publisher(f"{table}.q2")
     assert pub1._staging(0) != pub2._staging(0)
     pub2.publish(mk([(2, 20, 2.0, "b"), (3, 30, 3.0, "c")]), 0)
-    pub2.cleanup(0)
     spark.catalog.refreshTable(opts.qualified_name)
     ids = {r.event_id for r in spark.table(opts.qualified_name).collect()}
     assert ids == {2, 3}, "query 2's batch must land, not query 1's stale manifest"
 
     # query 1's replay still resumes ITS OWN manifest correctly
     pub1.publish(mk([(1, 10, 1.0, "a")]), 0)
-    pub1.cleanup(0)
     spark.catalog.refreshTable(opts.qualified_name)
     ids = {r.event_id for r in spark.table(opts.qualified_name).collect()}
     assert ids == {1, 2, 3}
@@ -849,7 +844,7 @@ def test_malformed_cast_fails_loudly_not_silent_null(spark, tmp_path):
     table, base = _mk_table(spark, partitioned=False)
     opts = HiveSinkOptions(db="default", table=table)
     ledger = BatchCommitLedger(os.path.join(base, "ledger"))
-    writer = make_batch_writer(opts, [], ledger, [])
+    writer = make_batch_writer(opts, [], ledger)
     bad = spark.createDataFrame(
         [("not-a-number", "10", "1.5", "click")],
         "event_id string, user_id string, value string, event_type string",
@@ -889,7 +884,7 @@ def test_table_meta_immune_to_metadata_named_columns(spark):
     assert meta["Provider"].lower() == "parquet"
 
 
-def test_hive_serde_provider_rejected_at_construction(spark, monkeypatch):
+def test_hive_serde_provider_rejected_at_construction(spark, monkeypatch, tmp_path):
     """adv-r10 (low): Provider 'hive' (SerDe tables) is not path-writable;
     the publisher must refuse at construction with sink-level guidance,
     not fail at stage time with an obscure AnalysisException."""
@@ -902,7 +897,7 @@ def test_hive_serde_provider_rejected_at_construction(spark, monkeypatch):
         sink_mod, "_table_meta", lambda s, q: {**real_meta, "Provider": "hive"}
     )
     with pytest.raises(HiveStreamingSinkError, match="not path-writable"):
-        StagedBatchPublisher(spark, f"default.{table}", [])
+        StagedBatchPublisher(spark, f"default.{table}", [], BatchCommitLedger(str(tmp_path)))
 
 
 def test_writer_lease_cross_process_fencing(spark):
@@ -1057,42 +1052,3 @@ def test_failed_lease_acquire_clears_in_process_claim(spark, tmp_path, monkeypat
     q.awaitTermination()
     spark.catalog.refreshTable(table)
     assert spark.table(table).count() > 0
-
-
-def test_transform_with_state_when_available(spark):
-    """AUTO-ACTIVATING (VERDICT r11 item 8): transformWithStateInPandas
-    is implemented but env-gated on the python protobuf package, absent
-    in this sandbox. If the runtime ever gains protobuf, this stops
-    skipping and certifies the state-API-v2 path against the static
-    aggregate it must reproduce."""
-    from spark_hive_streaming_sink_spark.streaming.stateful import (
-        _twsip_available,
-        stream_transform_with_state,
-    )
-
-    if not _twsip_available():
-        import pytest
-
-        pytest.skip("python protobuf not installed; TWS worker channel unavailable")
-    sf_dir = "/root/testdata/sf0.001"
-    got = sorted(
-        tuple(r) for r in stream_transform_with_state(spark, sf_dir).collect()
-    )
-    import pyspark.sql.functions as F
-
-    want = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            (
-                F.sum(F.round(F.col("value") * 100, 0).cast("bigint")).cast(
-                    "double"
-                )
-                / 100.0
-            ).alias("total_value"),
-        )
-        .collect()
-    )
-    assert got == want

@@ -92,13 +92,13 @@ def test_txnlog_replay_skipped_by_log_not_ledger(spark):
     expected = batch.count()
     scope = f"default.{table}.q1"
     w1 = make_batch_writer(
-        opts, part_cols, BatchCommitLedger(os.path.join(base, "l1")), [], scope=scope
+        opts, part_cols, BatchCommitLedger(os.path.join(base, "l1")), scope=scope
     )
     w1(batch, 0)
     assert read_txnlog_table(spark, "default", table).count() == expected
     # fresh ledger, same scope + batch id: log-anchored skip
     w2 = make_batch_writer(
-        opts, part_cols, BatchCommitLedger(os.path.join(base, "l2")), [], scope=scope
+        opts, part_cols, BatchCommitLedger(os.path.join(base, "l2")), scope=scope
     )
     w2(batch, 0)
     assert read_txnlog_table(spark, "default", table).count() == expected
@@ -181,7 +181,7 @@ def _txnlog_writer(spark, table, base, scope):
         spark, ["event_id", "user_id", "value", "event_type"], opts
     )
     ledger = BatchCommitLedger(os.path.join(base, "ledger"))
-    return make_batch_writer(opts, part_cols, ledger, [], scope=scope)
+    return make_batch_writer(opts, part_cols, ledger, scope=scope)
 
 
 def _small_batch(spark, i):
@@ -307,36 +307,45 @@ def test_txnlog_stats_skipping_prunes_files_never_wrong(spark):
     assert len(log.snapshot_files(predicate={"value": 1.0})) >= len(pruned)
 
 
-def test_delta_provider_gated_with_guidance(spark, tmp_path):
-    """table.format=delta without the delta-spark runtime must refuse
-    at query construction with setup guidance (never degrade silently);
-    unknown formats list the available providers."""
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_unavailable_table_format_refused(spark, tmp_path, fmt):
+    """A table.format outside TABLE_FORMAT_PROVIDERS refuses at query
+    construction and lists the available providers (never degrades
+    silently to another format)."""
     table, loc, base = _mk_table(spark)
     ev = stream_table(spark, SF_DIR, "events").select(
         "event_id", "user_id", "value", "event_type"
     )
-    try:
-        import delta  # noqa: F401
-
-        pytest.skip("delta-spark present; gating path not exercisable")
-    except ImportError:
-        pass
-    with pytest.raises(HiveStreamingSinkError, match="delta-spark"):
+    with pytest.raises(HiveStreamingSinkError, match="not available"):
         write_stream_to_table(
             ev,
             checkpoint_dir=str(tmp_path / "ckpt"),
             db="default",
             table=table,
-            **{"table.format": "delta"},
+            **{"table.format": fmt},
         )
-    with pytest.raises(HiveStreamingSinkError, match="not available"):
-        write_stream_to_table(
-            ev,
-            checkpoint_dir=str(tmp_path / "ckpt2"),
-            db="default",
-            table=table,
-            **{"table.format": "iceberg"},
-        )
+
+
+def test_txnlog_query_writes_no_ledger(spark):
+    """The commit log is the txnlog provider's only replay anchor: a
+    streaming query reads back every row and leaves no batch-id ledger
+    next to its checkpoint."""
+    table, loc, base = _mk_table(spark)
+    ev = stream_table(spark, SF_DIR, "events").select(
+        "event_id", "user_id", "value", "event_type"
+    )
+    q = write_stream_to_table(
+        ev,
+        checkpoint_dir=f"{base}/ckpt",
+        db="default",
+        table=table,
+        **{"table.format": "txnlog"},
+    )
+    q.awaitTermination()
+    got = sorted(tuple(r) for r in read_txnlog_table(spark, "default", table).collect())
+    assert got == sorted(tuple(r) for r in _events_batch(spark).collect())
+    assert os.path.isdir(f"{base}/ckpt/_sink_metrics")
+    assert not os.path.exists(f"{base}/ckpt/_commit_ledger")
 
 
 def test_txnlog_compaction_atomic_rewrite_and_vacuum(spark):
@@ -769,32 +778,6 @@ def test_txnlog_merge_tolerates_concurrent_append_of_unmatched_keys(
         == 999.0
     )
     assert final.filter(F.col("event_id") == 20_000_001).count() == 1
-
-
-def test_delta_write_path_when_available(spark, tmp_path):
-    """AUTO-ACTIVATING (VERDICT r11 item 8): the delta write branch
-    (`sink.py` provider == "delta") has never executed in this sandbox
-    because `delta-spark` cannot be installed here. If the runtime ever
-    gains it, this test stops skipping and certifies the branch
-    end-to-end: stream -> delta table -> delta read-back parity."""
-    pytest.importorskip("delta", reason="delta-spark runtime not installed")
-    table, loc, base = _mk_table(spark)
-    ev = stream_table(spark, SF_DIR, "events").select(
-        "event_id", "user_id", "value", "event_type"
-    )
-    q = write_stream_to_table(
-        ev,
-        checkpoint_dir=f"{base}/ckpt",
-        db="default",
-        table=table,
-        **{"table.format": "delta"},
-    )
-    q.awaitTermination()
-    got = spark.read.format("delta").load(loc)
-    assert got.count() == _events_batch(spark).count()
-    assert sorted(f.name for f in got.schema.fields) == [
-        "event_id", "event_type", "user_id", "value",
-    ]
 
 
 def test_schema_evolution_add_columns_txnlog(spark):
